@@ -155,9 +155,12 @@ case class PqApproxDot(left: Expression, right: Expression,
       a
     }.toArray
 
-  /** qv: quantized query vector; codes: m PQ codes. */
+  /** qv: quantized query vector; codes: exactly m PQ codes — any other
+    * length throws (a truncated sum would score a different vector). */
   def compute(qv: ArrayData, codes: ArrayData): Long = {
-    val m = math.min(flat.length, codes.numElements())
+    val m = flat.length
+    require(codes.numElements() == m,
+      s"graft_pq_approx_dot: ${codes.numElements()} codes for $m PQ subspaces")
     val qLen = qv.numElements()
     var total = 0L
     var s = 0
@@ -211,7 +214,9 @@ case class PqSubDistortions(left: Expression, right: Expression,
     }.toArray
 
   def compute(v: ArrayData, codes: ArrayData): ArrayData = {
-    val m = math.min(flat.length, codes.numElements())
+    val m = flat.length
+    require(codes.numElements() == m,
+      s"graft_pq_sub_distortions: ${codes.numElements()} codes for $m PQ subspaces")
     val vLen = v.numElements()
     val out = new Array[Long](m)
     var s = 0

@@ -20,7 +20,12 @@ final class Snapshot private (
 }
 
 object Snapshot {
-  def of(kv: KVTable, maxRows: Int = 1000000): Snapshot = {
+
+  /** Largest row count served from driver memory — by a snapshot here and
+    * by each bucket generation the Gateway's bucketed routes hold. */
+  val MaxRows: Int = 1000000
+
+  def of(kv: KVTable, maxRows: Int = MaxRows): Snapshot = {
     val latest = kv.latest
     val rows = latest.limit(maxRows + 1).collect()
     require(rows.length <= maxRows,

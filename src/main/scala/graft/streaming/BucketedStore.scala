@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, Murmur3Hash}
 import org.apache.spark.sql.functions._
 
 /** Key-hash-bucketed directory layout for incrementally-maintained tables.
@@ -78,6 +79,13 @@ object BucketedStore {
   def numBuckets(root: String, fs: StoreFs = LocalFs): Option[Int] =
     fs.readString(s"$root/.buckets").flatMap(_.trim.toIntOption)
 
+  /** The bucket a key tuple routes to, computed DRIVER-SIDE with the same
+    * Catalyst Murmur3Hash (seed 42) that [[bucketCol]] plans. Values must
+    * carry the stored key types (see [[pointLookup]]). */
+  def bucketOf(values: Seq[Any], numBuckets: Int): Int =
+    java.lang.Math.floorMod(
+      Murmur3Hash(values.map(CLit(_)), 42).eval(null).asInstanceOf[Int], numBuckets)
+
   /** P1 point read with the reference's routing cost model
     * (Murmur2Partitioner: key → ONE partition, api/.../Coordinator): the
     * key tuple is murmur3-hashed DRIVER-SIDE (same Catalyst Murmur3Hash
@@ -97,10 +105,8 @@ object BucketedStore {
     require(keyCols.nonEmpty && keyCols.size == values.size,
       "keyCols and values must align")
     numBuckets(root, fs).flatMap { n =>
-      import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, Murmur3Hash}
       val lits = values.map(CLit(_))
-      val h = Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int]
-      val id = java.lang.Math.floorMod(h, n)
+      val id = bucketOf(values, n)
       // routing-correctness guard: a probe literal whose type differs from
       // the stored column hashes differently and would route to the wrong
       // bucket — fail loudly instead of returning empty (cheap,

@@ -6,10 +6,14 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import graft.functions.TimeCryptoProof
 import graft.serving.{ChangeFeed, Gateway}
 import graft.state.{KVTable, Snapshot}
+import org.apache.spark.sql.functions.{lit, split}
 
 /** The HTTP serving layer (reference GatewayHttp's data plane): point
-  * reads, stats, CDC watch buffer, and signed-URL auth — driven over REAL
-  * loopback HTTP with the JDK client. */
+  * reads, stats, CDC watch buffer, signed-URL auth, /metrics, and the
+  * bucketed routes' in-memory generations (parity with the Spark scan,
+  * zero warm-read jobs, commit visibility and load/commit races under
+  * both commit protocols) — driven over REAL loopback HTTP with the JDK
+  * client. */
 class GatewaySpec extends SparkSpec {
   import spark.implicits._
 
@@ -129,7 +133,7 @@ class GatewaySpec extends SparkSpec {
       val ok = get(s"$base/kv/2")
       ok.statusCode() shouldBe 200
       ok.body() should include(""""owner":"robert"""")
-      // the stamped scan metric: one bucket dir, never the table — the
+      // the bucket dir the request resolved: one, never the table — the
       // reference's partition-routed read cost model (Group.scala:78-82)
       route.lastScanDirs.size shouldBe 1
       new java.io.File(route.lastScanDirs.head).getName should
@@ -171,4 +175,199 @@ class GatewaySpec extends SparkSpec {
       get(s"$base/index/nope").body() shouldBe "[]"
     } finally gw.stop()
   }
+
+  // ---- bucketed routes over in-memory bucket generations ----
+
+  private val Tags = Seq("etl", "gpu", "ml", "ops")
+
+  /** Accounts 1..40 over 8 buckets: tags from a fixed pattern, every
+    * seventh account tombstoned. `owner` carries the generation. */
+  private def accounts(gen: String) = (1L to 40L).map { a =>
+    val tags = Tags.zipWithIndex.collect { case (t, i) if (a + i) % (i + 2) != 0 => t }
+    (a, s"$gen-$a", tags.mkString(" "), a % 7 == 0)
+  }.toDF("account", "owner", "tags", "tombstone")
+
+  /** Commit `tbl` and its derived index to every one of 8 buckets. */
+  private def commitStore(root: String, tbl: org.apache.spark.sql.DataFrame,
+      batchId: Long, fs: graft.streaming.StoreFs): Unit = {
+    import graft.streaming.BucketedStore
+    val bexpr = BucketedStore.bucketCol(Seq("account"), 8)
+    BucketedStore.writeBuckets(tbl, bexpr, s"$root/t", 0 until 8, batchId, 8, fs)
+    val idx = graft.state.SecondaryIndex.build(
+      tbl.filter(!$"tombstone"), Seq("account"), split($"tags", " "))
+    BucketedStore.writeBuckets(idx, bexpr, s"$root/i", 0 until 8, batchId, 8, fs)
+  }
+
+  private def tempRoot(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  private def bucketedGateway(root: String, maxRows: Int = Snapshot.MaxRows,
+      fs: graft.streaming.StoreFs = graft.streaming.LocalFs): Gateway =
+    new Gateway(Snapshot.of(store),
+      bucketed = Some(new Gateway.BucketedRoute(spark, s"$root/t", Seq("account"),
+        fs, maxRows)),
+      index = Some(new Gateway.IndexRoute(spark, s"$root/t", s"$root/i",
+        Seq("account"), maxHits = 5, fs, maxRows))).start()
+
+  private val termQueries = Seq("etl", "gpu", "ml,ops", "etl,gpu", "etl,gpu,ml",
+    "gpu,gpu", "etl,nope", "nope")
+
+  /** Jobs Spark starts while `body` runs: every job start the listener
+    * sees before a marked sentinel job, which the bus delivers in order. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sentinel = "gateway-spec-sentinel"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          done.countDown()
+        else if (done.getCount > 0) seen.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobGroup(sentinel, sentinel)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      done.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      seen.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  it should "answer 50 keep-alive requests on one connection without the Nagle/delayed-ACK stall" in {
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val gw = new Gateway(Snapshot.of(store)).start()
+    try {
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${gw.port}/kv/2")).build()
+      http11.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() shouldBe 200
+      val ms = (1 to 50).map { _ =>
+        val t0 = System.nanoTime()
+        http11.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() shouldBe 200
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // a stalled response waits for the client's delayed ACK, ~40 ms
+      ms(ms.size / 2) should be < 20.0
+    } finally gw.stop()
+  }
+
+  it should "serve /kv and /index from memory with the same bodies as the Spark scan path" in {
+    val root = tempRoot("graft-gwp")
+    commitStore(root, accounts("g0"), 0L, graft.streaming.LocalFs)
+    val mem = bucketedGateway(root)
+    val scan = bucketedGateway(root, maxRows = 0) // every generation over the bound
+    try {
+      def body(gw: Gateway, path: String) = {
+        val r = get(s"http://127.0.0.1:${gw.port}$path")
+        (r.statusCode(), r.body())
+      }
+      val paths = (0L to 45L).map(k => s"/kv/$k") ++ termQueries.map(q => s"/index/$q")
+      paths.foreach(p => withClue(p)(body(mem, p) shouldBe body(scan, p)))
+      // the cases the comparison must cover
+      body(mem, "/kv/3")._1 shouldBe 200
+      body(mem, "/kv/7")._1 shouldBe 404 // tombstoned
+      body(mem, "/kv/45")._1 shouldBe 404 // never written
+      val etl = body(mem, "/index/etl")._2
+      etl.split("\\},\\{").length shouldBe 5 // page cut at maxHits
+      etl should not include """"account":7,""" // tombstoned
+      body(mem, "/index/etl,gpu,ml")._2 should not be "[]"
+      body(mem, "/index/etl,nope")._2 shouldBe "[]"
+    } finally { mem.stop(); scan.stop() }
+  }
+
+  it should "launch no Spark job across 20 warm bucketed reads" in {
+    val root = tempRoot("graft-gwj")
+    commitStore(root, accounts("g0"), 0L, graft.streaming.LocalFs)
+    val gw = bucketedGateway(root)
+    try {
+      val base = s"http://127.0.0.1:${gw.port}"
+      val paths = (1 to 10).map(k => s"$base/kv/$k") ++
+        (1 to 10).map(i => s"$base/index/${termQueries(i % termQueries.size)}")
+      paths.foreach(get) // loads every generation these reads need
+      jobsDuring(paths.foreach(p => get(p).statusCode() should (be(200) or be(404)))) shouldBe 0
+    } finally gw.stop()
+  }
+
+  for ((name, fs) <- Seq("rename" -> graft.streaming.LocalFs,
+      "manifest" -> graft.streaming.ObjectStoreSimFs)) {
+    it should s"serve a newly committed generation on the next read ($name protocol)" in {
+      val root = tempRoot(s"graft-gwf-$name")
+      commitStore(root, accounts("g0"), 0L, fs)
+      val gw = bucketedGateway(root, fs = fs)
+      try {
+        val base = s"http://127.0.0.1:${gw.port}"
+        get(s"$base/kv/2").body() should include(""""owner":"g0-2"""")
+        get(s"$base/index/etl").body() should include(""""owner":"g0-""")
+        // the next generation retags every account and revives account 7
+        commitStore(root, accounts("g1").withColumn("tombstone", $"account" === 2L)
+          .withColumn("tags", lit("new")), 1L, fs)
+        get(s"$base/kv/2").statusCode() shouldBe 404 // now tombstoned
+        get(s"$base/kv/7").body() should include(""""owner":"g1-7"""")
+        get(s"$base/index/etl").body() shouldBe "[]"
+        get(s"$base/index/new").body() should include(""""owner":"g1-1"""")
+      } finally gw.stop()
+    }
+
+    it should s"retry a load whose generation a commit deleted under it ($name protocol)" in {
+      val root = tempRoot(s"graft-gwr-$name")
+      commitStore(root, accounts("g0"), 0L, fs)
+      // a store whose next generation check of a bucket commits a new
+      // generation right after it answers: the load then finds the
+      // generation it was told about deleted
+      val racing = new RacingFs(fs, () => commitStore(root, accounts("g1"), 1L, fs))
+      val route = new Gateway.BucketedRoute(spark, s"$root/t", Seq("account"), racing)
+      racing.armed = true
+      route.get(Seq(2L)).map(_.getAs[String]("owner")) shouldBe Some("g1-2")
+      racing.armed shouldBe false // the race did happen
+    }
+  }
+
+  it should "report per-route counts, errors and latency percentiles on /metrics" in {
+    val feed = new ChangeFeed()
+    val gw = new Gateway(Snapshot.of(store), feed).start()
+    try {
+      val base = s"http://127.0.0.1:${gw.port}"
+      get(s"$base/metrics").body() should include(
+        """"kv":{"count":0,"errors":0,"p50_ms":null,"p99_ms":null}""")
+      (1 to 3).foreach(_ => get(s"$base/kv/2"))
+      get(s"$base/kv/99").statusCode() shouldBe 404 // a miss is not an error
+      get(s"$base/watch/acct1?from=x").statusCode() shouldBe 500
+      get(s"$base/stats")
+      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(get(s"$base/metrics").body())
+      m.get("kv").get("count").asLong() shouldBe 4
+      m.get("kv").get("errors").asLong() shouldBe 0
+      m.get("watch").get("errors").asLong() shouldBe 1
+      m.get("stats").get("count").asLong() shouldBe 1
+      m.get("index").get("count").asLong() shouldBe 0
+      val (p50, p99) = (m.get("kv").get("p50_ms").asDouble(), m.get("kv").get("p99_ms").asDouble())
+      p50 should be > 0.0
+      p99 should be >= p50
+    } finally gw.stop()
+  }
+}
+
+/** A [[graft.streaming.StoreFs]] that, once `armed`, runs `commit` right
+  * after answering its next bucket generation check (a bucket-dir listing
+  * or a pointer read) — a commit landing between a reader's check and its
+  * load, made deterministic. */
+final class RacingFs(fs: graft.streaming.StoreFs, commit: () => Unit)
+    extends graft.streaming.StoreFs {
+  @volatile var armed = false
+  private def fire[A](hit: Boolean)(a: A): A = {
+    if (armed && hit) { armed = false; commit() }
+    a
+  }
+  override def atomicRename: Boolean = fs.atomicRename
+  override def listNames(dir: String): Seq[String] =
+    fire(dir.matches(".*/b\\d+"))(fs.listNames(dir))
+  override def readString(path: String): Option[String] =
+    fire(path.endsWith(".ptr"))(fs.readString(path))
+  override def exists(path: String): Boolean = fs.exists(path)
+  override def isDir(path: String): Boolean = fs.isDir(path)
+  override def rename(src: String, dst: String): Boolean = fs.rename(src, dst)
+  override def deleteRecursively(path: String): Unit = fs.deleteRecursively(path)
+  override def mkdirs(path: String): Unit = fs.mkdirs(path)
+  override def writeString(path: String, content: String): Unit =
+    fs.writeString(path, content)
 }

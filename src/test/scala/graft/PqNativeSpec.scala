@@ -114,4 +114,15 @@ class PqNativeSpec extends SparkSpec {
       }
     }
   }
+
+  "PqApproxDot and PqSubDistortions" should "throw on a code array of the wrong length instead of truncating" in {
+    val df = Seq((Seq.fill(dims)(1L), Seq(0, 1, 2))) // m - 1 codes
+      .toDF("v", "codes")
+    Seq(pqApproxDot($"v", $"codes", codebooks, subDim),
+        pqSubDistortions($"v", $"codes", codebooks, subDim)).foreach { c =>
+      val e = the[Exception] thrownBy df.select(c).collect()
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalArgumentException]) shouldBe true
+    }
+  }
 }
